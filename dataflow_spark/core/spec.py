@@ -120,7 +120,11 @@ def run_stream_spec(
 
     Tiers reuse the tested kernels 1:1 (streaming/pipeline.py,
     streaming/indexed.py), so the spec runner inherits their exactly-once
-    sink, watermark and resume semantics.  ``dedup: indexed`` delegates to
+    sink, watermark and resume semantics.  Survivors are not the same
+    across tiers: ``custom`` keeps the smallest doc_seq of each token hash,
+    while ``builtin`` keeps an arbitrary copy when one micro-batch holds
+    several (see ``streaming_builtin_dedup``), so it equals first-seen
+    dedup only at one file per trigger.  ``dedup: indexed`` delegates to
     the generation-segment operator, which owns its own sink — a spec
     combining it with ``stages`` is rejected rather than silently ignored.
     Returns the started StreamingQuery; the caller drives it."""

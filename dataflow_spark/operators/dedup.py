@@ -253,8 +253,9 @@ def _cc_distributed_contract(
     shuffle + parallel local solves + a TINY residual beats even 2-3
     star rounds):
 
-    1. hash-shuffle edges on ``a`` (bucket stars have constant ``a``, so a
-       whole LSH star lands in one partition);
+    1. range-partition edges on ``a`` (bucket stars have constant ``a``, so
+       a whole LSH star lands in one partition, and a chain's consecutive
+       ids share a partition, which keeps its residual small);
     2. per partition, run the vectorized numpy min-label kernel on that
        partition's edge set -> (node, local_root) rows — the root is the
        min node id of the node's PARTITION-LOCAL component;
@@ -350,16 +351,20 @@ def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     unavailable."""
     try:
         jdf = df._jdf.localCheckpoint(True)
+    except Exception:
+        # no JVM-backed DataFrame (e.g. Spark Connect): plain eager
+        # checkpoint still truncates lineage, just without the stats reset
+        return df.localCheckpoint(eager=True)
+    try:
         jspark = df.sparkSession._jsparkSession
         new_jdf = jspark.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
         return DataFrame(new_jdf, df.sparkSession)
     except Exception:
-        # no JVM-backed DataFrame (e.g. Spark Connect) or hook changed:
-        # plain eager checkpoint still truncates lineage, just without the
-        # stats reset
-        return df.localCheckpoint(eager=True)
+        # hook changed: keep the checkpoint already taken rather than
+        # materializing the plan a second time
+        return DataFrame(jdf, df.sparkSession)
 
 
 def connected_components_min(
@@ -378,12 +383,13 @@ def connected_components_min(
       serial barrier.  At 10% dup rate the threshold covers corpora of ~40M
       docs per dedup invocation.
     - **contract** (above threshold, the default since round 4): one
-      hash-shuffle of the edges, a partition-local numpy CC inside
-      mapInPandas, then a CONTRACTED residual graph (local-root links of
-      nodes seen in several partitions) solved recursively — it collapses
-      under the local threshold in one step on every real near-dup graph,
-      so the whole solve is a FIXED number of data-heavy jobs with no
-      per-round checkpoint+convergence-count serial barrier (that barrier
+      range-partition shuffle of the edges on ``a``, a partition-local
+      numpy CC inside mapInPandas, then a CONTRACTED residual graph
+      (local-root links of nodes seen in several partitions) solved
+      recursively — it collapses under the local threshold in one step on
+      every real near-dup graph, so the whole solve is a FIXED number of
+      data-heavy jobs with no per-round checkpoint+convergence-count
+      serial barrier (that barrier
       was the measured core-count-independent gap at executor topology,
       VERDICT r3 #1).  See _cc_distributed_contract.
     - **iterative**: the pre-round-4 min-label propagation loop — kept as

@@ -501,22 +501,20 @@ def text2sql_prompt(
             yield pd.DataFrame({db_id_key: ids, "_db_details": det})
 
     id_type = df.schema[db_id_key].dataType.simpleString()
-    dmap_df = (
-        distinct.repartition(
-            max(1, min(64, spark.sparkContext.defaultParallelism))
-        )
-        .mapInPandas(introspect, f"{db_id_key} {id_type}, _db_details string")
-        .persist()
-    )
+    dmap_df = distinct.repartition(
+        max(1, min(64, spark.sparkContext.defaultParallelism))
+    ).mapInPandas(introspect, f"{db_id_key} {id_type}, _db_details string")
+    # the map is broadcast-sized: collect it once (one introspection job)
+    # and join it back as local data, so nothing stays cached afterwards
+    dmap_rows = dmap_df.collect()
     missing = [
         str(r[0]).replace("\n", "").replace("\r", "").strip()
-        for r in dmap_df.where(F.col("_db_details").isNull())
-        .select(db_id_key).collect()
+        for r in dmap_rows
+        if r[1] is None
     ]
     if missing:
-        dmap_df.unpersist()
         raise ValueError(f"Database(s) not found: {sorted(missing)}")
-    dmap = F.broadcast(dmap_df)
+    dmap = F.broadcast(spark.createDataFrame(dmap_rows, dmap_df.schema))
     if evidence_key and evidence_key in df.columns:
         ev = F.coalesce(F.col(evidence_key).cast("string"), F.lit(""))
         qe = F.when(

@@ -404,13 +404,13 @@ def run_exact_dedup_stream_indexed(
                 os.path.join(out_dir, f"batch_id={batch_id}", "_SUCCESS")
             )
             rows_sink(survivors.drop("_th"), batch_id)
-            _mark("rows_sink_s", t)
+            t = _mark("rows_sink_s", t)
             if seg_thread is not None:
                 # the batch must not commit until the segment is durable
                 seg_thread.join()
                 if seg_err:
                     raise seg_err[0]
-                _mark("segment_join_s", t)
+                t = _mark("segment_join_s", t)
             if fresh_output:
                 with open(metrics_path, "a") as fh:
                     fh.write(json.dumps({

@@ -12,10 +12,11 @@ a real Structured Streaming job:
   drop-in stand-in (identical schema and semantics downstream);
 * event-time watermark (``withWatermark``) bounds all state;
 * exact dedup: ``applyInPandasWithState`` keyed by a hash shard, state = seen
-  token-hash set with event-time timeout — the streaming analogue of the
-  reference's in-memory ``seen`` set (hash_deduplicate_filter.py:75-89),
-  approximation contract identical to dropDuplicatesWithinWatermark: exact
-  within the watermark horizon;
+  token-hash set with a per-hash event-time TTL kept by the state function
+  itself (no timeout, so no timeout scan and no watermark-only micro-batch)
+  — the streaming analogue of the reference's in-memory ``seen`` set
+  (hash_deduplicate_filter.py:75-89), approximation contract as
+  dropDuplicatesWithinWatermark: exact within the watermark horizon;
 * rule filters: the same Catalyst predicates as batch (stateless, fuse);
 * windowed aggregation: tumbling window keyed by (skew-salted) source;
 * sink: ``foreachBatch`` idempotent parquet append keyed by batchId —
@@ -100,9 +101,24 @@ _DEDUP_OUT_SCHEMA = T.StructType(
         T.StructField("_seen_total", T.LongType()),
     ]
 )
+# (seen_hashes, seen_ev_ms): the sorted int64 hash buffer and, aligned with
+# it, each hash's first-seen event time in ms.  A checkpoint written with the
+# earlier one-field layout fails Spark's state schema check on restart
+# (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE) instead of being misread.
 _DEDUP_STATE_SCHEMA = T.StructType(
-    [T.StructField("seen_hashes", T.BinaryType())]
+    [
+        T.StructField("seen_hashes", T.BinaryType()),
+        T.StructField("seen_ev_ms", T.BinaryType()),
+    ]
 )
+# _dedup_fn also returns the late rows it drops, flagged, so the JVM side can
+# count them (a named observe) before filtering them out
+_EXACT_FN_OUT_SCHEMA = T.StructType(
+    list(_DEDUP_OUT_SCHEMA.fields) + [T.StructField("_late", T.BooleanType())]
+)
+# a seen hash expires once the watermark is this far past its first-seen
+# event time
+SEEN_TTL_MS = 3600 * 1000
 
 
 def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -121,27 +137,41 @@ def _dedup_fn(
     SORTED int64 numpy buffer in a binary column — a state entry of S hashes
     costs one 8S-byte memcpy per micro-batch in each direction, where the
     previous array<long> layout boxed S Python ints on both load and store
-    (measured 4.8x slower at S=15k on the isolated kernel).  Within a
-    micro-batch rows are processed in doc_seq order so first-seen semantics
-    hold inside the batch too."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    (buf,) = state.get if state.exists else (None,)
-    seen = (
-        np.frombuffer(buf, dtype=np.int64) if buf else np.empty(0, np.int64)
-    )  # sorted invariant: np.union1d output below is sorted
+    (measured 4.8x slower at S=15k on the isolated kernel) — plus an aligned
+    buffer of each hash's first-seen event time.  Within a micro-batch rows
+    are processed in doc_seq order so first-seen semantics hold inside the
+    batch too.
+
+    The function does what an event-time timeout would, per hash and with no
+    timeout scan or watermark-only micro-batch: hashes first seen more than
+    SEEN_TTL_MS behind the watermark expire, and rows at or behind the
+    watermark are late — returned with ``_late`` set, never recorded.  The
+    watermark is restored from the checkpoint, so a restart expires nothing
+    early.  A shard expires its hashes only when it next receives rows."""
+    wm = state.getCurrentWatermarkMs()
+    if state.exists:
+        hbuf, ebuf = state.get
+        seen = np.frombuffer(hbuf, dtype=np.int64)
+        seen_ev = np.frombuffer(ebuf, dtype=np.int64)
+        live = seen_ev >= wm - SEEN_TTL_MS
+        seen, seen_ev = seen[live], seen_ev[live]
+    else:
+        seen = seen_ev = np.empty(0, np.int64)
     pending = np.empty(0, np.int64)  # new this batch, sorted
-    max_ev_ms = 0
+    new_th, new_ev = [], []  # the same hashes with their event times
     for pdf in pdf_iter:
+        # _ev_ms is unix_millis(event_time) computed JVM-side: pandas
+        # .timestamp() on the delivered tz-naive values would assume UTC
+        # while Spark delivers them in spark.sql.session.timeZone — under
+        # a non-UTC session TZ the TTL base would be offset by the zone
+        # delta (hours-long TTL drift).
+        late = pdf["_ev_ms"].to_numpy(dtype=np.int64) <= wm
+        if late.any():
+            yield pdf[late].drop(columns=["_th", "_ev_ms"]).assign(
+                _seen_total=len(seen) + len(pending), _late=True
+            )
+            pdf = pdf[~late]
         pdf = pdf.sort_values("doc_seq")
-        if len(pdf):
-            # _ev_ms is unix_millis(event_time) computed JVM-side: pandas
-            # .timestamp() on the delivered tz-naive values would assume UTC
-            # while Spark delivers them in spark.sql.session.timeZone — under
-            # a non-UTC session TZ the TTL base would be offset by the zone
-            # delta (hours-long TTL drift).
-            max_ev_ms = max(max_ev_ms, int(pdf["_ev_ms"].max()))
         # vectorized first-seen: new = not in persisted state, not in an
         # earlier chunk of this batch, and first occurrence in this
         # (doc_seq-sorted) chunk — no per-row Python (input_hint)
@@ -152,17 +182,21 @@ def _dedup_fn(
             & ~pd.Series(th).duplicated(keep="first").to_numpy()
         )
         pending = np.union1d(pending, th[keep_mask])
+        new_th.append(th[keep_mask])
+        new_ev.append(pdf["_ev_ms"].to_numpy(dtype=np.int64)[keep_mask])
         out = pdf[keep_mask].drop(columns=["_th", "_ev_ms"])
         if len(out):
-            out = out.assign(_seen_total=len(seen) + len(pending))
-            yield out
-    state.update((np.union1d(seen, pending).tobytes(),))
-    # TTL: one hour of EVENT time past the newest row this shard has seen.
-    # (Not the current watermark — on the first batch the watermark is still
-    # epoch-0, and a watermark-relative timeout would expire the whole state
-    # the moment the watermark jumps forward, e.g. across a restart.)
-    ttl_base = max(state.getCurrentWatermarkMs(), max_ev_ms)
-    state.setTimeoutTimestamp(ttl_base + 3600 * 1000)
+            yield out.assign(_seen_total=len(seen) + len(pending), _late=False)
+    if new_th:
+        th, ev = np.concatenate(new_th), np.concatenate(new_ev)
+        order = np.argsort(th)
+        pos = np.searchsorted(seen, th[order])
+        seen = np.insert(seen, pos, th[order])
+        seen_ev = np.insert(seen_ev, pos, ev[order])
+    if len(seen):
+        state.update((seen.tobytes(), seen_ev.tobytes()))
+    elif state.exists:
+        state.remove()
 
 
 def streaming_exact_dedup(
@@ -173,9 +207,13 @@ def streaming_exact_dedup(
     """Exact first-seen dedup over the stream.  The seen-hash state is sharded
     by hash prefix (``n_shards`` keys) so state distributes across executors;
     at 10^12-sequence scale raise n_shards to O(10 × cores) and the state
-    store (RocksDB in prod) holds the horizon's hashes.  TTL via event-time
-    timeout bounds state to the watermark horizon — the same approximation
-    contract as dropDuplicatesWithinWatermark."""
+    store (RocksDB in prod) holds the horizon's hashes.  Each hash expires
+    SEEN_TTL_MS of event time after it was first seen, measured against the
+    watermark, and rows at or behind the watermark are dropped as late: exact
+    within that horizon, as dropDuplicatesWithinWatermark is.  The late drops
+    of each micro-batch are the ``late_rows`` field of the named observation
+    ``exact_dedup`` (StreamingQueryProgress.observedMetrics, and the
+    idempotent sink's ``_metrics.jsonl`` record)."""
     tagged = (
         stream.withColumn("_th", F.xxhash64(F.col("tokens")))
         .withColumn("shard", F.pmod(F.col("_th"), F.lit(n_shards)).cast("int"))
@@ -186,19 +224,26 @@ def streaming_exact_dedup(
         .groupBy("shard")
         .applyInPandasWithState(
             _dedup_fn,
-            outputStructType=_DEDUP_OUT_SCHEMA,
+            outputStructType=_EXACT_FN_OUT_SCHEMA,
             stateStructType=_DEDUP_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .observe("exact_dedup", F.count_if(F.col("_late")).alias("late_rows"))
+        .where(~F.col("_late"))
+        .drop("_late")
     )
 
 
 def streaming_builtin_dedup(
     stream: DataFrame, watermark_delay: str = "10 minutes"
 ) -> DataFrame:
-    """Production-default path: dropDuplicatesWithinWatermark on the token
-    hash (state store managed by Spark; RocksDB-backed on a real cluster)."""
+    """dropDuplicatesWithinWatermark on the token hash (state store managed
+    by Spark; RocksDB-backed on a real cluster).  Which copy of a hash
+    survives inside one micro-batch depends on the order in which shuffle
+    blocks arrive, not on doc_seq: with several files per trigger the
+    survivors are not first-seen dedup.  They are at one doc_seq-ordered
+    file per trigger.  ``streaming_exact_dedup`` keeps doc_seq order."""
     tagged = stream.withColumn("_th", F.xxhash64(F.col("tokens")))
     return tagged.withWatermark("event_time", watermark_delay).dropDuplicatesWithinWatermark(
         ["_th"]
@@ -348,10 +393,34 @@ def near_dup_candidates_stream(
 # ---------------------------------------------------------------------------
 
 
+def _batch_observed_metrics(df: DataFrame) -> dict:
+    """Fields of the named streaming ``observe`` metrics (such as
+    ``exact_dedup.late_rows``) of the micro-batch that foreachBatch hands
+    over as ``df``; call after the batch's write job.  Spark publishes them
+    only in the batch's StreamingQueryProgress, after the sink returns, so
+    they are read from the running query's current execution.  Empty
+    outside a streaming query."""
+    spark = SparkSession.getActiveSession()
+    qid = df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+    query = spark.streams.get(qid) if spark is not None and qid else None
+    if query is None:
+        return {}
+    observed = query._jsq.streamingQuery().lastExecution().observedMetrics()
+    out = {}
+    rows = observed.values().iterator()
+    while rows.hasNext():
+        row = rows.next()
+        for i, name in enumerate(row.schema().fieldNames()):
+            out[name] = None if row.isNullAt(i) else row.get(i)
+    return out
+
+
 def idempotent_parquet_sink(out_dir: str, metrics_path: str | None = None):
     """foreachBatch writer: write-once per batchId (re-delivered batches after
     restart are skipped — exactly-once on top of at-least-once), per-partition
-    lineage columns (batch_id, part_id), per-batch metrics JSON.
+    lineage columns (batch_id, part_id), per-batch metrics JSON.  The
+    record also carries the fields of the stream's named ``observe``
+    metrics, e.g. the exact dedup tier's ``late_rows``.
 
     On a real cluster the same pattern targets an Iceberg table where the
     batchId is recorded as a snapshot property (commit-level idempotence)."""
@@ -406,6 +475,7 @@ def idempotent_parquet_sink(out_dir: str, metrics_path: str | None = None):
                 "rows": int(got["rows"] or 0),
                 "tokens": int(got["tokens"] or 0),
                 "partitions": parts,
+                **_batch_observed_metrics(df),
             }
             os.makedirs(os.path.dirname(metrics_path), exist_ok=True)
             with open(metrics_path, "a") as f:
@@ -430,13 +500,13 @@ def run_dedup_filter_stream(
     caller drives it (processAllAvailable in tests) and can kill/restart with
     the same checkpoint_dir to prove resume.
 
-    ``dedup_mode='builtin'`` swaps the sharded applyInPandasWithState
-    operator for dropDuplicatesWithinWatermark (JVM state, per-hash keys)
-    — measured ~30% faster for PLAIN exact dedup on the r400 corpus
-    (builtin ~8.6 s vs custom ~12.2 s warm at the 128-shard knee), because
-    builtins skip the Arrow state round-trip.  Keep 'custom' when the state
-    logic goes beyond what the builtin expresses (band near-dedup state,
-    custom TTL/CEP emission) — that is what the operator exists for."""
+    ``dedup_mode='custom'`` (the default) keeps the first copy of each token
+    hash in doc_seq order, inside a micro-batch too.  ``'builtin'`` swaps
+    in dropDuplicatesWithinWatermark (JVM state, per-hash keys), which skips
+    the Arrow state round-trip but keeps an arbitrary copy when one
+    micro-batch holds several: with several files per trigger its survivors
+    are not first-seen (the stream benchmark's oracle fails it), so it
+    matches 'custom' only at one file per trigger."""
     from dataflow_spark.operators.filters import keep_n_tok_range
 
     stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
